@@ -34,6 +34,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .sources.tables import table_schema
+
 
 class SchemaMismatchError(ValueError):
     """Strict schema-hash inequality at subscribe/publish time.
@@ -103,7 +105,9 @@ class StreamCatalog:
     ) -> StreamEntry:
         """Register an endpoint (atlas.insert). Schema may be a
         StructType, DDL string, or None (inferred from parquet footer)."""
-        if schema is None:
+        if schema is None and fmt == "parquet":
+            schema = table_schema(self.spark, path)
+        elif schema is None:
             schema = self.spark.read.format(fmt).load(path).schema
         elif isinstance(schema, str):
             parsed = T._parse_datatype_string(schema)

@@ -195,13 +195,18 @@ class QueryHandle:
         self.query.stop()
 
     def drain(self, timeout_s: float = 120.0) -> None:
-        """S6 drain: finish in-flight input, then stop."""
+        """S6 drain: finish in-flight input, then stop. A query that has
+        failed is stopped and its error raised at once; other errors
+        from ``processAllAvailable`` are retried until ``timeout_s``."""
         deadline = time.monotonic() + timeout_s
         while time.monotonic() < deadline:
             try:
                 self.query.processAllAvailable()
                 break
             except Exception:
+                if self.query.exception() is not None:
+                    self.query.stop()
+                    raise
                 time.sleep(0.2)
         self.query.stop()
 

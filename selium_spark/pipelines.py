@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from .catalog import StreamCatalog
 from .engine import Engine
 from .operators import stateful, transforms, windows
+from .sources.tables import table_schema
 
 
 def _mkdirs(base: str, *names: str) -> dict[str, str]:
@@ -188,7 +189,7 @@ def run_orchestrator(
         ["k"],
     )
     tagged.write.mode("overwrite").parquet(dirs["tagged"])
-    schema = spark.read.parquet(dirs["tagged"]).schema
+    schema = table_schema(spark, dirs["tagged"])
 
     from .streaming.replay import replay_to_memory
 

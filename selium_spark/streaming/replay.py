@@ -31,7 +31,9 @@ def replay_to_memory(
     fmt: str = "parquet",
 ) -> DataFrame:
     """Replay a parquet dir/file as a stream, apply ``transform``, sink
-    to memory, block until drained, return the sink's contents.
+    to memory, block until drained, return the sink's contents. A
+    replay still running after ``timeout_s`` is stopped and raises
+    ``TimeoutError``: a partial sink is never returned.
 
     ``shuffle_partitions`` sizes the stateful-operator state-store count
     for THIS query (the conf is captured at query start, then restored).
@@ -75,9 +77,12 @@ def replay_to_memory(
                 .trigger(availableNow=True)
                 .start()
             )
-            query.awaitTermination(timeout_s)
-            if query.isActive:
+            if not query.awaitTermination(timeout_s):
                 query.stop()
+                spark.catalog.dropTempView(name)
+                raise TimeoutError(
+                    f"replay of {source_path} did not drain within {timeout_s} s"
+                )
             # materialize before the checkpoint dir disappears —
             # JVM-side (executor-stored blocks, freed by the
             # ContextCleaner once the frame is unreferenced), NOT a

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from .operators import dedup, messaging, multimodal, packing, relational, similarity, text
 from .operators import sketches, transforms, windows
-from .sources.tables import load_table
+from .sources.tables import ensure_nanos_as_long, load_table, table_schema
 
 # ---------------------------------------------------------------------------
 # shared SQL fragments (DuckDB side)
@@ -73,6 +73,13 @@ def _charge() -> F.Column:
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
+
+
+def _events_schema(spark: SparkSession, sf_dir: str):
+    """The events table's schema for a streaming twin's reader, read
+    the way ``load_table`` reads it (nanos surface as long)."""
+    ensure_nanos_as_long(spark)
+    return table_schema(spark, f"{sf_dir}/events.parquet")
 
 
 def _norm_stream_ts(ev: DataFrame, schema, col: str = "ts") -> DataFrame:
@@ -1994,10 +2001,7 @@ def stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming.replay import replay_to_memory
     from pyspark.sql import types as T
 
-    from .sources.tables import ensure_nanos_as_long
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         ev = stream
@@ -2022,10 +2026,7 @@ def stream_threshold_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming.replay import replay_to_memory
     from pyspark.sql import types as T
 
-    from .sources.tables import ensure_nanos_as_long
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         ev = stream
@@ -2058,10 +2059,7 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming.replay import replay_to_memory
     from pyspark.sql import types as T
 
-    from .sources.tables import ensure_nanos_as_long
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         ev = _norm_stream_ts(stream, schema)
@@ -2098,7 +2096,7 @@ def stream_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.stateful import streaming_lsh_pairs as _op
     from .streaming.replay import replay_to_memory
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = table_schema(spark, f"{sf_dir}/documents.parquet")
 
     def transform(stream: DataFrame) -> DataFrame:
         return _op(
@@ -2353,7 +2351,7 @@ def stream_latest_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = tag_union(work, config, "ts", ["user_id"])
     tmp = tempfile.mkdtemp(prefix="selium_tagged_")
     tagged.write.mode("overwrite").parquet(tmp)
-    schema = spark.read.parquet(tmp).schema
+    schema = table_schema(spark, tmp)
 
     def transform(stream: DataFrame) -> DataFrame:
         return latest_enrich_stream(
@@ -2968,11 +2966,9 @@ def stream_join_clicks_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user click/purchase events joined within the replay horizon.
     With availableNow over a bounded replay the result equals the batch
     join, which is the oracle."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         ev = _norm_stream_ts(stream, schema)
@@ -3150,7 +3146,7 @@ def stream_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     cb_rows = similarity.pq_codebook(emb, m_subs=8, k_codes=16).collect()
-    schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
+    schema = table_schema(spark, f"{sf_dir}/embeddings.parquet")
 
     def transform(stream: DataFrame) -> DataFrame:
         return similarity.pq_encode_stateless(stream, cb_rows, m_subs=8)
@@ -3364,7 +3360,7 @@ def stream_ivfpq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb_rows = similarity.ivfpq_codebook(
         similarity.ivfpq_residuals(first16, cents), m_subs=8, k_codes=16
     ).collect()
-    schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
+    schema = table_schema(spark, f"{sf_dir}/embeddings.parquet")
 
     def transform(stream: DataFrame) -> DataFrame:
         return similarity.ivfpq_encode_stateless(
@@ -3578,11 +3574,9 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows in Structured Streaming (30-minute gap per
     user), replayed to completion — oracle is the same lag/cumsum
     sessionization identity as the batch twin w1c."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         ev = stream
@@ -4798,11 +4792,9 @@ def stream_cms_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     running heavy-hitter table over an unbounded stream. Replayed
     events land on the identical counters as the batch plan (DuckDB
     oracle-matched)."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         return sketches.cms_table(stream, "user_id", w=256).select(
@@ -4840,11 +4832,10 @@ def stream_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-on-read."""
     from pyspark.sql import Window
 
-    from .sources.tables import ensure_nanos_as_long, load_table
+    from .sources.tables import load_table
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         ev = _norm_stream_ts(stream, schema)
@@ -5144,11 +5135,9 @@ def stream_gapfill_locf_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming weekly gapfill twin (round 6): grain='week' replays to
     the same Monday-anchored grid as the batch weekly fold — the grain
     parity the batch/streaming twins promise (round-5 verdict #4)."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         ev = _norm_stream_ts(stream, schema)
@@ -5188,11 +5177,9 @@ def stream_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle). Re-emissions of a period (a later obs in the same period
     arriving in a later batch) are collapsed by max_by on the winning
     observation's (ts, tiebreak)."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         ev = _norm_stream_ts(stream, schema).where(F.col("user_id") < 50)
@@ -5262,11 +5249,9 @@ def stream_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     here by the family's max_by on the winning (src_ts_us, src_tb).
     The snapshot must equal the batch gapfill_interp fold (DuckDB
     oracle; same four-op IEEE interpolation chain, no rounding)."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         ev = _norm_stream_ts(stream, schema).where(F.col("user_id") < 50)
@@ -5354,11 +5339,9 @@ def stream_gapfill_watermark_fill(spark: SparkSession, sf_dir: str) -> DataFrame
     extends every key's grid to GREATEST(its own last obs period, the
     global watermark period - 1) — the rows beyond a key's last
     observation exist ONLY because the timeout emitted them."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         ev = _norm_stream_ts(stream, schema).where(F.col("user_id") < 50)
@@ -5591,11 +5574,9 @@ def stream_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed-bucket state layout (state_buckets=256, output-identical —
     BASELINE.md A/B); the per-key layout stays graded via the gapfill
     family and the parametrized parity tests."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         ev = _norm_stream_ts(stream, schema)
@@ -5628,11 +5609,9 @@ def stream_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     (step, last_ts) state driven by the replayed events stream, then
     the completion distribution — must equal the batch fold's answer
     (DuckDB oracle)."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
     steps = ["signup", "click", "purchase"]
 
     def transform(stream: DataFrame) -> DataFrame:
@@ -5696,11 +5675,9 @@ def stream_funnel_abandoned(spark: SparkSession, sf_dir: str) -> DataFrame:
     (event_id % 37 == 0) complete the funnel — the synthetic events
     give every user every type, so without the thinning no user could
     ever stall and the timeout path would be vacuously green."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
     steps = ["signup", "click", "purchase"]
 
     def transform(stream: DataFrame) -> DataFrame:
@@ -5782,11 +5759,9 @@ def stream_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     |keys| x 3 numbers, and the snapshot equals the batch answer
     (DuckDB oracle). This is the streaming side of
     windows.zscore_outliers' stats stage."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         dv = F.col("value").cast("decimal(18,2)")
@@ -5830,11 +5805,9 @@ def stream_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     longs of state total — a running distinct-users estimate over an
     unbounded stream. Replayed events must land on the identical
     registers as the batch plan (and they oracle-match DuckDB)."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         return sketches.hll_register_updates(stream, "user_id")
@@ -6520,11 +6493,9 @@ def stream_cusum_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_cusum_alarms). Open-period re-emissions collapse by max_by on
     the rows-folded marker. Runs the r7-adopted hashed-bucket state
     layout (state_buckets=256, output-identical — BASELINE.md A/B)."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         ev = _norm_stream_ts(stream, schema)
@@ -6591,11 +6562,9 @@ def stream_cusum_alarms_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshots (the only superseding classes), so the max_by(src_n)
     collapse still rescinds stale provisional alarms and the final
     ``WHERE alarm`` equals the batch alarms_only output exactly."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         ev = _norm_stream_ts(stream, schema)
@@ -6636,11 +6605,9 @@ def stream_ewma_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle); the HALF_UP round happens Spark-side on the raw double.
     Runs the r7-adopted hashed-bucket state layout (state_buckets=256,
     output-identical — BASELINE.md A/B)."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         ev = _norm_stream_ts(stream, schema)
@@ -7047,7 +7014,7 @@ def stream_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     merges = text.bpe_train_merges(docs, num_merges=_BPE_K)
     rules = [(r["lft"], r["rgt"]) for r in merges.collect()]
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = table_schema(spark, f"{sf_dir}/documents.parquet")
 
     def transform(stream: DataFrame) -> DataFrame:
         return stream.select(
@@ -7261,11 +7228,9 @@ def stream_attr_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader collapse. Equals the batch window pass under event-time-
     ordered replay, so this streaming query carries the batch
     oracle verbatim."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         from .operators.stateful import streaming_last_touch as op
@@ -7299,11 +7264,9 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     evict click state past click.ts + 1h — bounded state at 100 TB).
     Inner append-mode matches emit as they arrive; the oracle is the
     identical batch interval join."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         ev = _norm_stream_ts(stream, schema).withWatermark("ts", "0 seconds")
@@ -7495,11 +7458,9 @@ def stream_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the identical batch metrics (and HLL register math) over
     the whole corpus."""
     from .operators import expectations as X
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
     rules = [
         X.expect_not_null("user_id"),
         X.expect_between("value", 0.0, 200.0, max_frac=0.5),
@@ -7609,11 +7570,10 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates revenue per market segment in complete mode. At 100 TB
     the dim is a broadcast or a bucketed static table; stream state
     is only the |segments|-row aggregate."""
-    from .sources.tables import ensure_nanos_as_long, load_table
+    from .sources.tables import load_table
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
@@ -7659,11 +7619,9 @@ def stream_left_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     unmatched rows only where click.ts + 1h < max(event ts). NULL
     purchase becomes a -1 sentinel (nullable-BIGINT canonicalization,
     same device as attr_last_touch)."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         ev = _norm_stream_ts(stream, schema).withWatermark("ts", "0 seconds")
@@ -7794,11 +7752,9 @@ def stream_attr_multi_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     per key, not O(history)). Equals the batch window pass under
     event-time-ordered replay, so it carries the batch oracle
     verbatim."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         from .operators.stateful import streaming_multi_touch as op
@@ -7854,11 +7810,9 @@ def stream_attr_position_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.2 (candidates lexsorted on (ts, id) so carried-state and
     batch-local touches interleave in the batch's sort order). Batch
     oracle verbatim."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         from .operators.stateful import streaming_multi_touch as op
@@ -8022,11 +7976,9 @@ def stream_weekly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     and converge to the batch rollup. Windows anchor to the epoch
     (1970-01-01, a Thursday), so the oracle buckets by the same
     7-day epoch arithmetic rather than ISO date_trunc('week')."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         ev = _norm_stream_ts(stream, schema)
@@ -8091,11 +8043,9 @@ def stream_weekly_ohlc_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial week stays open — pending, not missing — and the oracle
     mirrors that boundary (the stream_left_interval_join eviction
     device applied to windowed aggregation)."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         ev = _norm_stream_ts(stream, schema).withWatermark("ts", "0 seconds")
@@ -8157,11 +8107,9 @@ def stream_daily_ohlc_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark-closed bars emitted exactly once, state O(open days);
     the final partial day stays open (pending, not missing) and the
     oracle mirrors that boundary."""
-    from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _events_schema(spark, sf_dir)
 
     def transform(stream: DataFrame) -> DataFrame:
         ev = _norm_stream_ts(stream, schema).withWatermark("ts", "0 seconds")

@@ -228,3 +228,28 @@ def test_engine_listener_lifecycle_bounded(spark):
         assert jcount() - base == 1
         assert sum(1 for r, _, _ in _LISTENER_REGISTRY if r() is eng) == 1
     assert jcount() - base == 0
+
+
+def test_drain_raises_when_the_query_failed(spark, tmp_path):
+    """A failed query must not drain as if it finished: drain stops it
+    and raises its error at once instead of retrying to the deadline."""
+    import time
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    src = str(tmp_path / "src")
+    spark.range(5).write.parquet(src)
+    cat = StreamCatalog(spark)
+    cat.insert("sel://failing/in", src)
+    eng = Engine(spark, cat)
+    failing = cat.read_stream("sel://failing/in").select(
+        F.raise_error(F.lit("drain test failure")).alias("x")
+    )
+    handle = eng.start("failing_query", failing, checkpoint=str(tmp_path / "ckpt"))
+    t0 = time.monotonic()
+    with pytest.raises(StreamingQueryException, match="drain test failure"):
+        handle.drain(timeout_s=30)
+    assert time.monotonic() - t0 < 15
+    assert not handle.query.isActive
+    eng.close()

@@ -195,3 +195,146 @@ def test_catalog_reads_orc_channels(spark, tmp_path):
     assert {(r["kind"], r["count"]) for r in out.collect()} == {
         ("even", 10), ("odd", 10),
     }
+
+
+# -- parquet schema cache (sources.tables.table_schema) ----------------------
+
+
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs that ``fn()`` starts, counted through a job group. A
+    marker job in a second group flushes the listener bus first: once the
+    status tracker sees it, it has seen every earlier job."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"schema_cache_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "counted")
+    try:
+        fn()
+        sc.setJobGroup(group + "_marker", "marker")
+        sc.parallelize([1], 1).count()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(group + "_marker"):
+        assert time.monotonic() < deadline, "marker job never reached the status tracker"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def _write_arrow(path, columns: dict) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(columns), str(path))
+
+
+def test_warm_load_table_starts_no_jobs(spark, catalog, tmp_path):
+    import shutil
+
+    from selium_spark.sources.tables import load_table
+
+    shutil.copy(catalog.get("sel://testdata/nation").path, tmp_path / "nation.parquet")
+    sf_dir = str(tmp_path)
+    assert _jobs_started(spark, lambda: load_table(spark, sf_dir, "nation")) >= 1
+    assert _jobs_started(spark, lambda: load_table(spark, sf_dir, "nation")) == 0
+    warm = load_table(spark, sf_dir, "nation")
+    inferred = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    assert warm.schema == inferred.schema
+    assert sorted(warm.collect()) == sorted(inferred.collect())
+
+
+def test_table_schema_sees_rewrites(spark, tmp_path):
+    """A new length or a new modification time is a new file version."""
+    import os
+
+    from selium_spark.sources.tables import table_schema
+
+    path = tmp_path / "t.parquet"
+    _write_arrow(path, {"a": [1, 2, 3]})
+    assert table_schema(spark, str(path)).names == ["a"]
+    _write_arrow(path, {"a": [1, 2, 3], "b": [4, 5, 6]})  # longer file
+    assert table_schema(spark, str(path)).names == ["a", "b"]
+
+    before = os.stat(path)
+    _write_arrow(path, {"a": [1, 2, 3], "c": [4, 5, 6]})
+    assert os.stat(path).st_size == before.st_size  # only the mtime tells
+    os.utime(path, ns=(before.st_atime_ns, before.st_mtime_ns + 5_000_000_000))
+    assert table_schema(spark, str(path)).names == ["a", "c"]
+
+
+def test_table_schema_key_includes_inference_confs(spark, tmp_path):
+    import pyarrow as pa
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import types as T
+
+    from selium_spark.sources.tables import table_schema
+
+    events = str(tmp_path / "events.parquet")
+    _write_arrow(events, {
+        "event_id": pa.array([1, 2], pa.int64()),
+        "ts": pa.array([1_700_000_000_000_000_123, 1_700_000_000_000_000_456], pa.timestamp("ns")),
+    })
+    blobs = str(tmp_path / "blobs.parquet")
+    _write_arrow(blobs, {"b": pa.array([b"x", b"y"], pa.binary())})
+    nanos, binary = "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString"
+    saved = {k: spark.conf.get(k) for k in (nanos, binary)}
+    try:
+        spark.conf.set(nanos, "true")
+        assert isinstance(table_schema(spark, events)["ts"].dataType, T.LongType)
+        spark.conf.set(nanos, "false")  # a cached LongType would be wrong here
+        with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+            table_schema(spark, events)
+        spark.conf.set(nanos, "true")
+        assert isinstance(table_schema(spark, events)["ts"].dataType, T.LongType)
+
+        spark.conf.set(binary, "false")
+        assert isinstance(table_schema(spark, blobs)["b"].dataType, T.BinaryType)
+        spark.conf.set(binary, "true")
+        assert isinstance(table_schema(spark, blobs)["b"].dataType, T.StringType)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def test_table_schema_directory_bypasses_cache(spark, tmp_path):
+    from selium_spark.sources.tables import table_schema
+
+    src = str(tmp_path / "dir_table")
+    spark.range(3).write.parquet(src)
+    for _ in range(2):  # every call infers: a directory is never cached
+        assert _jobs_started(spark, lambda: table_schema(spark, src)) >= 1
+
+
+def test_no_inline_parquet_schema_reads():
+    """Every parquet schema read in the package goes through
+    ``table_schema``, so new streaming twins get the cache."""
+    import ast
+    import pathlib
+
+    import selium_spark
+
+    root = pathlib.Path(selium_spark.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        allowed = set()
+        if path.relative_to(root).as_posix() == "sources/tables.py":
+            for node in ast.walk(tree):
+                if isinstance(node, ast.FunctionDef) and node.name == "table_schema":
+                    allowed.update(range(node.lineno, node.end_lineno + 1))
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute) and node.attr == "schema"
+                and isinstance(node.value, ast.Call)
+                and isinstance(node.value.func, ast.Attribute)
+                and node.value.func.attr == "parquet"
+                and isinstance(node.value.func.value, ast.Attribute)
+                and node.value.func.value.attr == "read"
+                and node.lineno not in allowed
+            ):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, f"use sources.tables.table_schema instead: {offenders}"

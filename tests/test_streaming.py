@@ -2126,3 +2126,20 @@ def test_streaming_multi_touch_weights_synthetic(spark, tmp_path):
             if r["conversion_id"] == 14
         }
         assert b == expect
+
+
+def test_replay_timeout_raises_and_stops_the_query(spark, tmp_path):
+    """A replay that has not drained by ``timeout_s`` raises instead of
+    returning the rows that happened to reach the sink."""
+    import pytest
+
+    path = str(tmp_path / "src")
+    _write_events(spark, path, [(1, "2024-01-01 00:00:01", 5), (2, "2024-01-01 00:00:02", 7)])
+    schema = spark.read.parquet(path).schema
+
+    def transform(stream):
+        return stream.groupBy("id").agg(F.sum("v").alias("total"))
+
+    with pytest.raises(TimeoutError, match="did not drain"):
+        replay_to_memory(spark, path, schema, transform, output_mode="complete", timeout_s=0.001)
+    assert not [q for q in spark.streams.active if (q.name or "").startswith("replay_")]
