@@ -28,7 +28,7 @@ from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 from .catalog import StreamCatalog
 
 
-from .fsutil import fs_exists, fs_mkdirs, fs_touch  # noqa: E402  (re-export:
+from .fsutil import fs_exists, fs_mkdirs, fs_touch, start_stream  # noqa: E402  (re-export:
 # the ledger and epoch-write below are the primary consumers)
 
 
@@ -330,8 +330,10 @@ class Engine:
     def console_sink(self, df: DataFrame, name: str = "console"):
         """S12: host tails a stream and renders it (forward_log_stream,
         system/runtime/src/modules.rs:747-767)."""
-        return (
-            df.writeStream.queryName(name).format("console").outputMode("append").start()
+        return start_stream(
+            self.spark,
+            df.writeStream.queryName(name).format("console").outputMode("append"),
+            None,
         )
 
     def start(
@@ -354,15 +356,17 @@ class Engine:
         writer = df.writeStream.queryName(name).outputMode(output_mode)
         if trigger_available_now:
             writer = writer.trigger(availableNow=True)
-        if mode == "park":
-            if not checkpoint:
-                raise ValueError("park-mode query needs a checkpoint dir")
-            writer = writer.option("checkpointLocation", checkpoint)
+        if mode == "park" and not checkpoint:
+            raise ValueError("park-mode query needs a checkpoint dir")
+        if mode != "park":
+            checkpoint = None
         if sink_uri is None:
-            q = writer.format("memory").start()
+            q = start_stream(self.spark, writer.format("memory"), checkpoint)
         else:
             entry = self.catalog.get(sink_uri)
-            q = writer.format(fmt or entry.fmt).start(entry.path)
+            q = start_stream(
+                self.spark, writer.format(fmt or entry.fmt), checkpoint, entry.path
+            )
         handle = QueryHandle(name=name, query=q, mode=mode)
         self.queries[name] = handle
         return handle
@@ -404,11 +408,8 @@ class Engine:
             write_fn(batch_df, epoch_id)
             fs_touch(spark, marker)
 
-        q = (
-            df.writeStream.queryName(name)
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint)
-            .start()
+        q = start_stream(
+            self.spark, df.writeStream.queryName(name).foreachBatch(_process), checkpoint
         )
         handle = QueryHandle(name=name, query=q, mode="park")
         self.queries[name] = handle
@@ -527,11 +528,8 @@ class Engine:
         def _process(batch_df: DataFrame, epoch_id: int) -> None:
             foreach_concurrent(batch_df, fn, max_concurrency)
 
-        q = (
-            df.writeStream.queryName(name)
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint)
-            .start()
+        q = start_stream(
+            self.spark, df.writeStream.queryName(name).foreachBatch(_process), checkpoint
         )
         handle = QueryHandle(name=name, query=q, mode="park")
         self.queries[name] = handle
@@ -562,11 +560,8 @@ class Engine:
             finally:
                 batch_df.unpersist()
 
-        q = (
-            df.writeStream.queryName(name)
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint)
-            .start()
+        q = start_stream(
+            self.spark, df.writeStream.queryName(name).foreachBatch(_process), checkpoint
         )
         handle = QueryHandle(name=name, query=q, mode="park")
         self.queries[name] = handle

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import StreamCatalog
+from ..fsutil import start_stream
 
 
 def publish(
@@ -49,12 +50,12 @@ def publish(
             f"publish to {uri}: dataframe schema hash {df_hash} != endpoint {entry.hash}"
         )
     if df.isStreaming:
+        if mode == "park" and not checkpoint:
+            raise ValueError("park-mode streaming publish needs a checkpoint dir")
+        if mode != "park":
+            checkpoint = None
         writer = df.writeStream.format(entry.fmt).outputMode("append")
-        if mode == "park":
-            if not checkpoint:
-                raise ValueError("park-mode streaming publish needs a checkpoint dir")
-            writer = writer.option("checkpointLocation", checkpoint)
-        return writer.start(entry.path)
+        return start_stream(catalog.spark, writer, checkpoint, entry.path)
     df.write.format(entry.fmt).mode("append").save(entry.path)
     return None
 
@@ -142,8 +143,6 @@ def request_reply_stream(
         replies = request_reply_batch(batch_df, handler)
         replies.write.format(entry.fmt).mode("append").save(entry.path)
 
-    return (
-        requests.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return start_stream(
+        catalog.spark, requests.writeStream.foreachBatch(_process), checkpoint
     )

@@ -1577,16 +1577,19 @@ def bpe_token_counts(
     occurrence (6 merges x ~5 string copies each). The merge stack
     runs once per DISTINCT word (Heaps' law: vocab << occurrences),
     the per-word subword count broadcast-joins back onto the exploded
-    tokens, and one doc-level sum re-aggregates. Identical numbers by
-    construction: n_bpe = sum over occurrences of n_sub(word) =
-    size(flatten(transform(tokens, apply))); a zero-token doc keeps
-    (0, 0) via the left join, matching size(flatten([])) = 0.
+    tokens, and one doc-level sum re-aggregates. For a non-null text,
+    n_bpe = sum over occurrences of n_sub(word) =
+    size(bpe_apply(text)); a zero-token doc keeps (0, 0) via the left
+    join, matching size(flatten([])) = 0. A null text also gives (0, 0),
+    where size(bpe_apply(null)) is -1 (null under ANSI); the per-row
+    :func:`bpe_count` agrees with this function on every row.
 
     Streaming twins must keep :func:`bpe_apply`'s per-row map (a
     groupBy is not append-legal); this is the batch half only. The
-    vocab table is corpus-sublinear but not constant — the planner
-    falls back to a shuffled join past the broadcast threshold, which
-    still beats per-occurrence rewriting whenever vocab << tokens.
+    per-word table is corpus-sublinear but not constant, and the
+    ``F.broadcast`` hint broadcasts it whatever its size: the hint
+    overrides ``spark.sql.autoBroadcastJoinThreshold``, so no shuffled
+    join is ever planned here.
     """
 
     def n_sub(w: Column) -> Column:
@@ -1633,3 +1636,10 @@ def bpe_apply(col: str | Column, rules: list[tuple[str, str]]) -> Column:
         return F.split(s, BPE_SEP)
 
     return F.flatten(F.transform(tokens(col), word_tokens))
+
+
+def bpe_count(col: str | Column, rules: list[tuple[str, str]]) -> Column:
+    """Per-row subword count, the streaming form of
+    :func:`bpe_token_counts`' ``n_bpe``: a null text counts 0."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.size(bpe_apply(F.coalesce(c, F.lit("")), rules)).cast("long")

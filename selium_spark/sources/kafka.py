@@ -24,6 +24,8 @@ from typing import Mapping
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fsutil import start_stream
+
 _FRAME_COLS = ["key", "value", "topic", "partition", "offset", "timestamp"]
 
 
@@ -140,4 +142,4 @@ def write_stream(
     writer = out.writeStream.queryName(query_name).format("kafka")
     for k, v in writer_options(brokers, topic).items():
         writer = writer.option(k, v)
-    return writer.option("checkpointLocation", checkpoint).start()
+    return start_stream(df.sparkSession, writer, checkpoint)

@@ -17,6 +17,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..fsutil import start_stream
+
 
 def replay_to_memory(
     spark: SparkSession,
@@ -69,13 +71,13 @@ def replay_to_memory(
     )
     try:
         with tempfile.TemporaryDirectory(prefix="selium_ckpt_") as ckpt, provider_ctx:
-            query = (
+            query = start_stream(
+                spark,
                 out.writeStream.queryName(name)
                 .outputMode(output_mode)
                 .format("memory")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+                .trigger(availableNow=True),
+                ckpt,
             )
             if not query.awaitTermination(timeout_s):
                 query.stop()

@@ -7004,7 +7004,7 @@ FROM documents d LEFT JOIN per_doc s USING (doc_id)
 
 def stream_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming BPE tokenization: documents replayed as a file stream
-    through text.bpe_apply with merges trained on the batch table
+    through text.bpe_count with merges trained on the batch table
     beforehand (the deployment shape: tokenizer trained offline, then
     applied to the ingest stream). Pure per-row literal-rule map — no
     state store, APPEND-legal, emission equals the batch tokenize
@@ -7017,9 +7017,7 @@ def stream_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = table_schema(spark, f"{sf_dir}/documents.parquet")
 
     def transform(stream: DataFrame) -> DataFrame:
-        return stream.select(
-            "doc_id", F.size(text.bpe_apply("text", rules)).cast("long").alias("n_bpe")
-        )
+        return stream.select("doc_id", text.bpe_count("text", rules).alias("n_bpe"))
 
     return replay_to_memory(
         spark, f"{sf_dir}/documents.parquet", schema, transform, output_mode="append"

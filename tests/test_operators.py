@@ -2007,3 +2007,23 @@ def test_simhash_hamming_wide_production_family(spark):
         dedup.simhash(df, n_bits=33)
     with pytest.raises(ValueError):
         dedup.simhash(df, n_bits=64, hash_fn="xxhash64")
+
+
+def test_array_lit_rejects_nested_empty_list():
+    """An empty array at any depth raises the top-level ValueError
+    instead of rendering ``array()`` (typed array<string> by Spark)."""
+    with pytest.raises(ValueError, match="empty literal array"):
+        similarity._array_lit([])
+    with pytest.raises(ValueError, match="empty literal array"):
+        similarity._array_lit([[1.0, 2.0], []])
+
+
+def test_array_lit_rejects_ints_beyond_int64():
+    """An int outside int64 raises instead of parsing as DECIMAL(38,0);
+    the int64 bounds themselves still render as BIGINT literals."""
+    with pytest.raises(ValueError, match="int64"):
+        similarity._array_lit([1, 2**63])
+    with pytest.raises(ValueError, match="int64"):
+        similarity._array_lit([[-(2**63) - 1]])
+    assert similarity._num_sql(2**63 - 1) == str(2**63 - 1)
+    assert similarity._num_sql(-(2**63)) == str(-(2**63))

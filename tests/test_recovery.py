@@ -245,3 +245,57 @@ def test_dedup_index_epoch_write_replay_is_idempotent(spark, tmp_path):
     )
     dedup_index_epoch_write(spark, b2, 1, idx, surv)
     assert state() == ([1, 2, 11], 3, 3)
+
+
+def test_windowed_count_restarts_from_local_checkpoint(spark, tmp_path):
+    """A stateful windowed count started through ``Engine.start`` is
+    stopped, given new input and restarted from the same checkpoint:
+    the restarted query reads back the state deltas the first run
+    committed, so its complete output equals the batch count over all
+    input."""
+    from selium_spark import Engine
+    from selium_spark.fsutil import FS_CHECKPOINT_MANAGER
+
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+
+    def write(rows):
+        spark.createDataFrame(rows, "k STRING, ts STRING").withColumn(
+            "ts", F.col("ts").cast("timestamp")
+        ).coalesce(1).write.mode("append").parquet(src)
+
+    def count(df):
+        return df.groupBy(F.window("ts", "10 seconds").alias("w"), "k").count()
+
+    def run(name):
+        eng = Engine(spark)
+        h = eng.start(
+            name,
+            count(spark.readStream.schema(schema).parquet(src)),
+            checkpoint=ckpt,
+            output_mode="complete",
+            trigger_available_now=True,
+        )
+        try:
+            assert h.query.awaitTermination(120)
+            assert (
+                h.query._jsq.streamingQuery().offsetLog().fileManager().getClass().getName()
+                == FS_CHECKPOINT_MANAGER
+            )
+            return {(r.w.start, r.k, r["count"]) for r in spark.table(name).collect()}
+        finally:
+            eng.close()
+
+    write([("a", "2024-01-01 00:00:01"), ("a", "2024-01-01 00:00:02"), ("b", "2024-01-01 00:00:11")])
+    schema = spark.read.parquet(src).schema
+    first = run("win_first")
+    assert sorted(c for _, _, c in first) == [1, 2]
+
+    # new input for an open window and a new one while the query is down
+    write([("a", "2024-01-01 00:00:03"), ("c", "2024-01-01 00:00:25")])
+    restarted = run("win_restarted")
+    batch = {
+        (r.w.start, r.k, r["count"]) for r in count(spark.read.parquet(src)).collect()
+    }
+    assert restarted == batch
+    assert sorted(c for _, _, c in restarted) == [1, 1, 3]

@@ -2143,3 +2143,128 @@ def test_replay_timeout_raises_and_stops_the_query(spark, tmp_path):
     with pytest.raises(TimeoutError, match="did not drain"):
         replay_to_memory(spark, path, schema, transform, output_mode="complete", timeout_s=0.001)
     assert not [q for q in spark.streams.active if (q.name or "").startswith("replay_")]
+
+
+def _checkpoint_manager(query) -> str:
+    """Class name of the manager behind a running query's offset log."""
+    return query._jsq.streamingQuery().offsetLog().fileManager().getClass().getName()
+
+
+def test_start_stream_uses_fs_manager_on_local_disk_and_restores_conf(spark, tmp_path):
+    """A query on a local checkpoint runs its logs through the
+    FileSystem-based manager; the session's conf is left as it was."""
+    from selium_spark.fsutil import CHECKPOINT_MANAGER_CONF, FS_CHECKPOINT_MANAGER
+
+    src = str(tmp_path / "src")
+    _write_events(spark, src, [(1, "2024-01-01 00:00:01", 5)])
+    before = spark.conf.get(CHECKPOINT_MANAGER_CONF, None)
+    eng = Engine(spark)
+    h = eng.start(
+        "fs_manager",
+        spark.readStream.schema(spark.read.parquet(src).schema).parquet(src),
+        checkpoint=str(tmp_path / "ckpt"),
+    )
+    try:
+        h.query.processAllAvailable()
+        assert spark.conf.get(CHECKPOINT_MANAGER_CONF, None) == before
+        assert _checkpoint_manager(h.query) == FS_CHECKPOINT_MANAGER
+        assert spark.table("fs_manager").count() == 1
+    finally:
+        eng.close()
+
+
+def test_start_stream_keeps_a_session_set_manager_class(spark, tmp_path):
+    """A class the session set itself is used and stays set."""
+    from selium_spark.fsutil import CHECKPOINT_MANAGER_CONF
+
+    own = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
+    src = str(tmp_path / "src")
+    _write_events(spark, src, [(1, "2024-01-01 00:00:01", 5)])
+    spark.conf.set(CHECKPOINT_MANAGER_CONF, own)
+    eng = Engine(spark)
+    try:
+        h = eng.start(
+            "own_manager",
+            spark.readStream.schema(spark.read.parquet(src).schema).parquet(src),
+            checkpoint=str(tmp_path / "ckpt"),
+        )
+        h.query.processAllAvailable()
+        assert _checkpoint_manager(h.query) == own
+        assert spark.conf.get(CHECKPOINT_MANAGER_CONF) == own
+    finally:
+        eng.close()
+        spark.conf.unset(CHECKPOINT_MANAGER_CONF)
+
+
+def test_checkpoint_manager_class_keeps_default_off_local_disk():
+    """Only local-disk checkpoints and sinks get the FileSystem-based
+    manager; every other scheme, and a session-set class, keep Spark's
+    choice (None)."""
+    from selium_spark.fsutil import FS_CHECKPOINT_MANAGER, checkpoint_manager_class
+
+    assert checkpoint_manager_class("/tmp/ckpt") == FS_CHECKPOINT_MANAGER
+    assert checkpoint_manager_class("file:/tmp/ckpt", "/tmp/sink") == FS_CHECKPOINT_MANAGER
+    assert checkpoint_manager_class(None) == FS_CHECKPOINT_MANAGER  # Spark's temp dir
+    assert checkpoint_manager_class("hdfs://nn:8020/ckpt") is None
+    assert checkpoint_manager_class("s3a://bucket/ckpt") is None
+    assert checkpoint_manager_class("/tmp/ckpt", "s3a://bucket/sink") is None
+    assert checkpoint_manager_class("/tmp/ckpt", default_fs="hdfs://nn:8020") is None
+    assert checkpoint_manager_class(None, default_fs="hdfs://nn:8020") is None
+    assert checkpoint_manager_class("file:/tmp/ckpt", default_fs="hdfs://nn:8020") == (
+        FS_CHECKPOINT_MANAGER
+    )
+    assert checkpoint_manager_class("/tmp/ckpt", user_class="my.Manager") is None
+
+
+def test_every_stream_starts_through_start_stream():
+    """No ``writeStream`` chain in the package calls ``.start(`` itself:
+    every query goes through ``fsutil.start_stream`` and so gets the
+    local checkpoint manager."""
+    import ast
+    import pathlib
+
+    import selium_spark
+
+    def rooted_in_writer(expr, writers) -> bool:
+        while isinstance(expr, (ast.Call, ast.Attribute)):
+            if isinstance(expr, ast.Attribute) and expr.attr == "writeStream":
+                return True
+            expr = expr.func if isinstance(expr, ast.Call) else expr.value
+        return isinstance(expr, ast.Name) and expr.id in writers
+
+    root = pathlib.Path(selium_spark.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        allowed = set()
+        if path.relative_to(root).as_posix() == "fsutil.py":
+            for node in ast.walk(tree):
+                if isinstance(node, ast.FunctionDef) and node.name == "start_stream":
+                    allowed.update(range(node.lineno, node.end_lineno + 1))
+        # names bound to a writer chain (writer = df.writeStream...;
+        # writer = writer.option(...)), to a fixed point
+        writers: set[str] = set()
+        while True:
+            found = {
+                t.id
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Assign) and rooted_in_writer(node.value, writers)
+                for t in node.targets
+                if isinstance(t, ast.Name)
+            }
+            if found <= writers:
+                break
+            writers |= found
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "start"
+                and rooted_in_writer(node.func.value, writers)
+                and node.lineno not in allowed
+            ):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, f"start streams with fsutil.start_stream: {offenders}"

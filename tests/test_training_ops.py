@@ -851,3 +851,23 @@ def test_bpe_train_stops_when_no_pairs_left(spark):
     assert got == [(1, "a", "b", "ab", 2)]
     singles = _docs(spark, [(1, "a b c a b", "s")])
     assert t.bpe_train_merges(singles, num_merges=3).count() == 0
+
+
+def test_bpe_null_text_counts_zero_in_batch_and_stream(spark, tmp_path):
+    """A null text counts 0 subwords in both the batch counter and the
+    per-row map the streaming twin replays, like an empty text."""
+    from selium_spark.streaming.replay import replay_to_memory
+
+    rules = [("a", "a"), ("a", "b")]
+    path = str(tmp_path / "docs")
+    _docs(spark, [(1, "aaa ab a", "s"), (2, None, "s"), (3, "", "s")]).write.parquet(path)
+    docs = spark.read.parquet(path)
+    batch = {r["doc_id"]: r["n_bpe"] for r in text.bpe_token_counts(docs, rules).collect()}
+    streamed = replay_to_memory(
+        spark,
+        path,
+        docs.schema,
+        lambda s: s.select("doc_id", text.bpe_count("text", rules).alias("n_bpe")),
+    )
+    stream = {r["doc_id"]: r["n_bpe"] for r in streamed.collect()}
+    assert batch == stream == {1: 4, 2: 0, 3: 0}
