@@ -824,7 +824,10 @@ def stream_replay_metrics(
 ) -> dict:
     """Replay ``src`` through ``transform`` in maxFilesPerTrigger
     micro-batches to a noop sink, returning throughput + state-store
-    metrics from the query's progress events."""
+    metrics from the query's progress events. A replay still running
+    after ``timeout_s`` is stopped and raises ``TimeoutError``, like
+    ``replay_to_memory``: partial metrics are never returned."""
+    from selium_spark.fsutil import start_stream
     from selium_spark.streaming.state import state_store_provider
 
     stream = (
@@ -844,16 +847,18 @@ def stream_replay_metrics(
     try:
         with tempfile.TemporaryDirectory(prefix="stress_ckpt_") as ckpt, ctx:
             t0 = time.time()
-            q = (
+            q = start_stream(
+                spark,
                 out.writeStream.outputMode(output_mode)
                 .format("noop")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+                .trigger(availableNow=True),
+                ckpt,
             )
-            q.awaitTermination(timeout_s)
-            if q.isActive:
+            if not q.awaitTermination(timeout_s):
                 q.stop()
+                raise TimeoutError(
+                    f"replay of {src} did not drain within {timeout_s} s"
+                )
             wall = time.time() - t0
             progs = [
                 p if isinstance(p, dict) else json.loads(p.json)

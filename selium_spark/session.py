@@ -21,6 +21,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
+# The directory holding the selium_spark package. Python workers get it
+# on their PYTHONPATH, so a UDF that imports the package runs whatever
+# the driver's cwd or PYTHONPATH.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "selium_spark",
@@ -35,6 +40,13 @@ def get_spark(
     Nothing below hard-codes data sizes.
     """
     cpus = cpus or DEFAULT_CPUS
+    # local[N] workers share this filesystem: ship the package by path,
+    # after any PYTHONPATH the caller set for its workers
+    extra_conf = dict(extra_conf or {})
+    worker_path = "spark.executorEnv.PYTHONPATH"
+    extra_conf[worker_path] = os.pathsep.join(
+        p for p in (extra_conf.get(worker_path), PACKAGE_ROOT) if p
+    )
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -84,7 +96,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DF_DEBUGGING", "false"),
         )
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -101,7 +113,7 @@ def get_spark(
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
         **{
             k: v
-            for k, v in (extra_conf or {}).items()
+            for k, v in extra_conf.items()
             if k.startswith(("spark.driver.", "spark.sql.codegen.cache."))
         },
     }

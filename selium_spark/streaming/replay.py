@@ -38,10 +38,9 @@ def replay_to_memory(
     ``TimeoutError``: a partial sink is never returned.
 
     ``shuffle_partitions`` sizes the stateful-operator state-store count
-    for THIS query (the conf is captured at query start, then restored).
-    Streaming state stores cost per-partition commit overhead every
-    micro-batch — size to state volume, not core count: 8 handles test
-    SFs; a 100 TB deployment raises it with its key cardinality.
+    for THIS query (the conf is captured at query start, then restored;
+    None inherits the session's count). The suite's streaming twins
+    pass ``suite.STREAM_STATE_PARTITIONS``, which says how it is sized.
 
     ``state_store`` selects the provider for THIS query ('rocksdb' for
     disk-backed bounded-memory state — the 100 TB configuration; None

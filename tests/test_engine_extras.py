@@ -6,6 +6,8 @@ from pyspark.sql import functions as F
 
 from selium_spark import Engine, StreamCatalog
 
+from conftest import SF_DIR
+
 
 def test_singletons(spark):
     eng = Engine(spark)
@@ -253,3 +255,36 @@ def test_drain_raises_when_the_query_failed(spark, tmp_path):
     assert time.monotonic() - t0 < 15
     assert not handle.query.isActive
     eng.close()
+
+
+def test_python_workers_import_the_package_from_any_cwd(tmp_path):
+    """``get_spark`` puts the package on its Python workers' PYTHONPATH
+    (after the caller's own value), so a UDF that imports selium_spark
+    runs from a cwd outside the repo with PYTHONPATH unset."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    import selium_spark
+
+    root = pathlib.Path(selium_spark.__file__).resolve().parent.parent
+    script = f"""
+import os, sys
+sys.path.insert(0, {str(root)!r})
+from selium_spark import suite
+from selium_spark.session import PACKAGE_ROOT, get_spark
+spark = get_spark(cpus=2, extra_conf={{"spark.executorEnv.PYTHONPATH": "/opt/extra"}})
+spark.sparkContext.setLogLevel("ERROR")
+conf = spark.conf.get("spark.executorEnv.PYTHONPATH")
+assert conf == "/opt/extra" + os.pathsep + PACKAGE_ROOT, conf
+print("ROWS", suite.wasm_udf_lcg_bucket(spark, {SF_DIR!r}).count())
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "ROWS 16" in out.stdout

@@ -253,6 +253,41 @@ def test_stream_replay_metrics_machinery(spark, tmp_path):
     assert m["state_mb"] > 0  # rocksdb memory reported
 
 
+def test_stream_replay_metrics_timeout_raises(spark, tmp_path):
+    """A stress replay that outlives its timeout is stopped and raises
+    ``TimeoutError``; it never reports the partial run's metrics."""
+    import pathlib
+    import sys
+
+    import pytest
+
+    import selium_spark
+
+    sys.path.insert(0, str(pathlib.Path(selium_spark.__file__).resolve().parent.parent))
+    from scripts.scale_stress import stream_replay_metrics
+
+    src = str(tmp_path / "ids")
+    for part in range(2):
+        spark.range(part * 100, part * 100 + 100).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    schema = spark.read.parquet(src).schema
+
+    with pytest.raises(TimeoutError, match="did not drain"):
+        stream_replay_metrics(
+            spark,
+            src,
+            schema,
+            lambda s: s.groupBy((s.id % 7).alias("k")).count(),
+            "complete",
+            state_store=None,
+            shuffle_partitions=2,
+            max_files=1,
+            timeout_s=0.001,
+        )
+    assert not spark.streams.active
+
+
 def test_stream_ops_streaming_session_runs(spark, tmp_path):
     """The native-session_window entry in the --streaming stress set
     replays end-to-end (append mode, rocksdb): sessions merge in JVM

@@ -2268,3 +2268,44 @@ def test_every_stream_starts_through_start_stream():
             ):
                 offenders.append(f"{path.relative_to(root)}:{node.lineno}")
     assert not offenders, f"start streams with fsutil.start_stream: {offenders}"
+
+
+def test_streaming_twins_share_one_replay_declaration():
+    """The state-partition count and the events source schema are each
+    decided in one place: no call in the package passes an integer
+    literal as ``shuffle_partitions=`` (use
+    ``suite.STREAM_STATE_PARTITIONS``), and no ``suite.py`` function
+    but ``_replay_table`` reads ``_events_schema``."""
+    import ast
+    import pathlib
+
+    import selium_spark
+
+    root = pathlib.Path(selium_spark.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        rel = path.relative_to(root).as_posix()
+        allowed = set()
+        if rel == "suite.py":
+            for node in ast.walk(tree):
+                if isinstance(node, ast.FunctionDef) and node.name == "_replay_table":
+                    allowed.update(range(node.lineno, node.end_lineno + 1))
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            offenders += [
+                f"{rel}:{node.lineno} shuffle_partitions={kw.value.value}"
+                for kw in node.keywords
+                if kw.arg == "shuffle_partitions"
+                and isinstance(kw.value, ast.Constant)
+                and type(kw.value.value) is int
+            ]
+            if (
+                rel == "suite.py"
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "_events_schema"
+                and node.lineno not in allowed
+            ):
+                offenders.append(f"{rel}:{node.lineno} _events_schema")
+    assert not offenders, f"declare streaming twins through suite._replay_table: {offenders}"
